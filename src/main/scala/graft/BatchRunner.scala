@@ -392,12 +392,7 @@ object RunJobs {
     def opt(flag: String): Option[String] =
       args.sliding(2).collectFirst { case Array(`flag`, v) => v }
     val concurrency = opt("--concurrency").map(_.toInt).getOrElse(1)
-    val builder = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
+    val builder = GraftSession.builder()
     // concurrent jobs share executors fairly instead of FIFO head-of-line
     if (concurrency > 1) builder.config("spark.scheduler.mode", "FAIR")
     JobRunner.configureCatalog(builder)

@@ -90,19 +90,13 @@ object Bench {
       .flatMap(_.trim.toIntOption).getOrElse(1)
     if (sessionsN > 1) { runSessions(args, sessionsN); return }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // min over `reps` runs per query: single-run local[32] timings swing
     // ±20% with GC/JIT noise; the minimum is the stable "cost of the
     // plan" estimate. Per-rep times are ALSO emitted so a contended run
     // (uniform inflation across untouched queries — the r9 failure mode)
     // is distinguishable from a real plan regression after the fact.
     val reps = sys.env.getOrElse("GRAFT_BENCH_REPS", "3").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
+    val spark = GraftSession.builder()
       // Janino generated-class cache (STATIC conf, default 100 entries).
       // Measured (r22, JitProbe): ann_neardup_forced alone generates
       // ~130 distinct codegen sources per repetition, so at the default

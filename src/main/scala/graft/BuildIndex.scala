@@ -469,9 +469,12 @@ object BuildIndex {
       case "embedding_buckets" =>
         // the near-dup key store is append-only by contract — a
         // rebuild is a new path, not an overwrite
-        Similarity.appendEmbeddingBuckets(input, idCol, vecCol, store,
-          planes = intOpt("planes").getOrElse(8),
-          tables = intOpt("tables").getOrElse(8), dim = dim)
+        val (planes, tables) =
+          (intOpt("planes").getOrElse(8), intOpt("tables").getOrElse(8))
+        Similarity.embeddingBucketStore(graft.core.KeyStore.Flat(store),
+          planes, tables, dim)
+          .append(Similarity.embeddingBucketKeys(input, idCol, vecCol,
+            planes, tables, dim))
         None
     }
     BuildReport(kind, store, rows, raw)
@@ -486,13 +489,7 @@ object BuildIndex {
       sys.exit(graft.core.ExitCodes.Failure)
     }
     val cfgPath = args(0)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
+    val spark = GraftSession.builder()
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try {

@@ -111,9 +111,7 @@ object CheckJob {
 /** `runMain graft.DiscoverJob <job.yaml>` — prints one object per line. */
 object DiscoverJob {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try {
       val (src, jobDir) = CheckDiscover.loadSource(args(0))

@@ -326,7 +326,6 @@ object JobRunner {
     if (c.isEmpty) return df
     def need(k: String): String = Yaml.str(c, k).getOrElse(
       throw new IllegalArgumentException(s"curation requires $k"))
-    val bucketed = curationStoreBucketed(c)
     if (curationStoreFormat(c) == "bloom" &&
         Yaml.str(c, "dedupe").exists(_ != "incremental"))
       throw new IllegalArgumentException(
@@ -377,47 +376,11 @@ object JobRunner {
       case "exact" =>
         out = graft.operators.Dedup.dropExactDuplicates(
           out, need("id_field"), need("text_field"))
-      case "incremental" =>
-        // vs an existing fingerprint store (missing store = first run);
-        // append surviving rows' fingerprints post-commit via
-        // Dedup.appendFingerprints — store maintenance is a separate
-        // write, not part of the job's single action. With
-        // `store_format: bucketed`, `fingerprint_store` names a TABLE
-        // bucketed on the join key (the 100 TB shape: the store streams
-        // with zero Exchange; only the batch shuffles). With
-        // `store_format: bloom`, the store's `_bloom` sidecar prefilters
-        // map-side (missing sidecar = build once from the store) and
-        // only bloom-positive rows touch the store.
-        if (curationStoreFormat(c) == "bloom") {
-          val store = graft.operators.Dedup.readFingerprints(
-            df.sparkSession, need("fingerprint_store"))
-          val sketch = graft.operators.Dedup.readBloomSidecar(
-            df.sparkSession, need("fingerprint_store")).getOrElse(
-            graft.operators.Dedup.buildFingerprintBloom(
-              store, bloomExpectedItems(c), bloomFpp(c)))
-          out = graft.operators.Dedup.dropDuplicatesIncrementalBloom(
-            out, need("id_field"), need("text_field"), store, sketch)
-        } else
-          out = graft.operators.Dedup.dropDuplicatesIncremental(
-            out, need("id_field"), need("text_field"),
-            if (bucketed) graft.operators.Dedup.readBucketedFingerprints(
-              df.sparkSession, need("fingerprint_store"))
-            else graft.operators.Dedup.readFingerprints(
-              df.sparkSession, need("fingerprint_store")))
-      case "incremental_near" =>
-        // vs an existing (id, band-key) MinHash store; the exact-Jaccard
-        // verify re-reads candidate corpus documents from `corpus_path`
-        // (the prior days' committed output), semi-join pruned to
-        // candidates only. Store maintenance post-commit via
-        // appendBandKeys / saveBucketedBandKeys, same split as above.
-        out = graft.operators.Dedup.dropNearDuplicatesIncremental(
-          out, need("id_field"), need("text_field"),
-          if (bucketed) graft.operators.Dedup.readBucketedBandKeys(
-            df.sparkSession, need("band_key_store"))
-          else graft.operators.Dedup.readBandKeys(
-            df.sparkSession, need("band_key_store")),
-          readCorpusDocs(df.sparkSession, need("corpus_path"),
-            need("id_field"), need("text_field"), out))
+      case "incremental" | "incremental_near" | "incremental_simhash" =>
+        // vs the mode's key store (missing store = first run); the rows
+        // that land are appended post-commit in `phase.curation_store`
+        val s = curationStore(c).get
+        out = s.probe(out, s.store.read(df.sparkSession))
       case "spans" =>
         // cut repeated passages in place (keep-first); schema preserved,
         // fully-duplicate documents disappear
@@ -453,22 +416,6 @@ object JobRunner {
           out, need("id_field"), need("text_field"),
           maxTokenDf = Yaml.str(c, "tfidf_max_token_df")
             .map(_.toDouble.toInt).getOrElse(50))
-      case "incremental_simhash" =>
-        // vs an existing (id, simhash) store (missing store = first run);
-        // append surviving rows' hashes post-commit via
-        // Dedup.appendSimhashes — store maintenance is a separate write,
-        // same contract as the exact incremental store. Bucketed form
-        // stores pre-exploded (sh, chunk-key) rows bucketed on the key.
-        out =
-          if (bucketed)
-            graft.operators.Dedup.dropSimhashDuplicatesIncrementalChunked(
-              out, need("id_field"), need("text_field"),
-              graft.operators.Dedup.readBucketedSimhashChunks(
-                df.sparkSession, need("simhash_store")))
-          else graft.operators.Dedup.dropSimhashDuplicatesIncremental(
-            out, need("id_field"), need("text_field"),
-            graft.operators.Dedup.readSimhashes(
-              df.sparkSession, need("simhash_store")))
       case other =>
         throw new IllegalArgumentException(s"unknown curation.dedupe: $other")
     }
@@ -637,7 +584,7 @@ object JobRunner {
     * appends are plain parquet), `bucketed` (store keys name TABLES
     * bucketed on the join key, so the per-batch store join reads with
     * zero Exchange — the 100 TB shape; see
-    * [[graft.operators.Dedup.saveBucketedFingerprints]]), or `bloom`
+    * [[graft.operators.Dedup.fingerprintStore]]), or `bloom`
     * (`dedupe: incremental` only — a `_bloom` sketch sidecar inside the
     * parquet store answers "definitely new" map-side, so the store is
     * only consulted for the bloom-positive sliver; sized by
@@ -651,8 +598,88 @@ object JobRunner {
         s"unknown curation.store_format: $other (parquet|bucketed|bloom)")
     }
 
-  private def curationStoreBucketed(c: Map[String, Any]): Boolean =
-    curationStoreFormat(c) == "bucketed"
+  /** The key store of an incremental `curation.dedupe` mode, with what
+    * is done with it: `probe` dedups a batch against the store's rows
+    * (in [[applyCuration]]); post-commit, `keys` turns the landed rows
+    * into store rows for the append and `maintain` does the mode's
+    * extra upkeep. `compact` opts the store into
+    * `curation.compact_store_every`.
+    */
+  private final case class CurationStore(
+      store: KeyStore,
+      keys: DataFrame => DataFrame,
+      probe: (DataFrame, DataFrame) => DataFrame,
+      maintain: DataFrame => Unit = _ => (),
+      compact: Boolean = true)
+
+  /** `dedupe` + `store_format` → the mode's [[CurationStore]]; None for
+    * modes that keep no key store.
+    */
+  private def curationStore(c: Map[String, Any]): Option[CurationStore] = {
+    import graft.operators.Dedup
+    def need(k: String): String = Yaml.str(c, k).getOrElse(
+      throw new IllegalArgumentException(s"curation requires $k"))
+    def id = need("id_field")
+    def text = need("text_field")
+    val format = curationStoreFormat(c)
+    def at(k: String): KeyStore.Location =
+      if (format == "bucketed") KeyStore.Bucketed(need(k)) else KeyStore.Flat(need(k))
+    def fingerprints(df: DataFrame) = df.select(Dedup.fingerprint(col(text)).as("fp"))
+    Yaml.str(c, "dedupe").collect {
+      case "incremental" if format == "bloom" =>
+        // the flat store's `_bloom` sidecar prefilters map-side (missing
+        // sidecar = build once from the store). Post-commit the batch's
+        // sketch merges into the sidecar, or with no sidecar yet it is
+        // built from the just-appended store — merging the batch again is
+        // harmless, bloom insertion is idempotent for the same items
+        val path = need("fingerprint_store")
+        val store = Dedup.fingerprintStore(KeyStore.Flat(path))
+        def sketch(fps: DataFrame) =
+          Dedup.buildFingerprintBloom(fps, bloomExpectedItems(c), bloomFpp(c))
+        CurationStore(store, fingerprints,
+          probe = (batch, fps) => Dedup.dropDuplicatesIncrementalBloom(
+            batch, id, text, fps,
+            Dedup.readBloomSidecar(batch.sparkSession, path).getOrElse(sketch(fps))),
+          maintain = { landed =>
+            val spark = landed.sparkSession
+            Dedup.writeBloomSidecar(spark, path,
+              Dedup.readBloomSidecar(spark, path) match {
+                case Some(s) => Dedup.mergeFingerprintBloom(s, sketch(fingerprints(landed)))
+                case None => sketch(store.read(spark))
+              })
+          },
+          compact = false)
+      case "incremental" =>
+        CurationStore(Dedup.fingerprintStore(at("fingerprint_store")), fingerprints,
+          probe = Dedup.dropDuplicatesIncremental(_, id, text, _))
+      case "incremental_near" =>
+        // the exact-Jaccard verify re-reads candidate corpus documents
+        // from `corpus_path` (the prior days' committed output, missing =
+        // day 1), semi-join pruned to candidates only. The landed
+        // documents are appended there next to their band keys: without
+        // them tomorrow's candidates verify against an empty corpus and
+        // near-dups silently pass
+        CurationStore(Dedup.bandKeyStore(at("band_key_store")),
+          Dedup.minhashBandKeys(_, id, text),
+          probe = (batch, bands) => {
+            val docs = batch.select(col(id), col(text))
+            Dedup.dropNearDuplicatesIncremental(batch, id, text, bands,
+              KeyStore.readOrEmpty(batch.sparkSession, need("corpus_path"), docs.schema)
+                .select(col(id), col(text)))
+          },
+          maintain = _.select(col(id), col(text))
+            .write.mode("append").parquet(need("corpus_path")))
+      case "incremental_simhash" if format == "bucketed" =>
+        // pre-exploded (sh, chunk-key) rows bucketed on the chunk key
+        CurationStore(Dedup.simhashChunkStore(at("simhash_store")),
+          Dedup.simhashChunks(_, id, text),
+          probe = Dedup.dropSimhashDuplicatesIncrementalChunked(_, id, text, _))
+      case "incremental_simhash" =>
+        CurationStore(Dedup.simhashStore(at("simhash_store")),
+          Dedup.simhashTable(_, id, text),
+          probe = Dedup.dropSimhashDuplicatesIncremental(_, id, text, _))
+    }
+  }
 
   private def bloomExpectedItems(c: Map[String, Any]): Long =
     Yaml.str(c, "bloom_expected_items").map(_.toLong).getOrElse(1000000L)
@@ -681,21 +708,6 @@ object JobRunner {
     if (sys.env.get("GRAFT_CATALOG").contains("hive"))
       builder.enableHiveSupport()
   }
-
-  /** Corpus documents for the incremental near-dup verify. A missing
-    * path is the day-1 bootstrap (empty corpus, typed off the batch so
-    * the join keys line up); any other failure propagates — same
-    * contract as the store readers.
-    */
-  private def readCorpusDocs(spark: SparkSession, path: String,
-      idCol: String, textCol: String, batch: DataFrame): DataFrame =
-    try spark.read.parquet(path).select(col(idCol), col(textCol))
-    catch {
-      case e: org.apache.spark.sql.AnalysisException
-          if e.getCondition == "PATH_NOT_FOUND" ||
-            Option(e.getMessage).exists(_.contains("Path does not exist")) =>
-        batch.select(col(idCol), col(textCol)).limit(0)
-    }
 
   /** Output base path `root/domain/data_product/table` (cli.py:695-723).
     * Local-path root comes from connection.path; S3 from connection.s3.bucket.
@@ -904,74 +916,20 @@ object JobRunner {
         if (cur.nonEmpty && Yaml.bool(cur, "update_store")) {
           def need(k: String): String = Yaml.str(cur, k).getOrElse(
             throw new IllegalArgumentException(s"curation requires $k"))
-          val bucketed = curationStoreBucketed(cur)
-          Yaml.str(cur, "dedupe") match {
-            case Some("incremental") if bucketed =>
-              graft.operators.Dedup.saveBucketedFingerprints(
-                curated, need("text_field"), need("fingerprint_store"))
-            case Some("incremental")
-                if curationStoreFormat(cur) == "bloom" =>
-              // fingerprint append PLUS the sketch sidecar: merge the
-              // batch's sketch into the existing sidecar, or (no sidecar
-              // yet) build from the just-appended full store — merging
-              // the batch again is harmless, bloom insertion is
-              // idempotent for the same items
-              val store = need("fingerprint_store")
-              graft.operators.Dedup.appendFingerprints(
-                curated, need("text_field"), store)
-              val sparkS = curated.sparkSession
-              val expected = bloomExpectedItems(cur)
-              val fpp = bloomFpp(cur)
-              val batchSketch = graft.operators.Dedup.buildFingerprintBloom(
-                curated.select(graft.operators.Dedup.fingerprint(
-                  col(need("text_field"))).as("fp")), expected, fpp)
-              val merged = graft.operators.Dedup
-                .readBloomSidecar(sparkS, store) match {
-                case Some(s) =>
-                  graft.operators.Dedup.mergeFingerprintBloom(s, batchSketch)
-                case None => graft.operators.Dedup.buildFingerprintBloom(
-                  graft.operators.Dedup.readFingerprints(sparkS, store),
-                  expected, fpp)
-              }
-              graft.operators.Dedup.writeBloomSidecar(sparkS, store, merged)
-            case Some("incremental") =>
-              graft.operators.Dedup.appendFingerprints(
-                curated, need("text_field"), need("fingerprint_store"))
-            case Some("incremental_near") =>
-              // TWO appends: band keys for the LSH join AND the documents
-              // for the exact-Jaccard verify — without the corpus append,
-              // tomorrow's candidates verify against an empty corpus and
-              // near-dups silently pass (the verify semi-join prunes
-              // everything).
-              if (bucketed)
-                graft.operators.Dedup.saveBucketedBandKeys(
-                  curated, need("id_field"), need("text_field"),
-                  need("band_key_store"))
-              else
-                graft.operators.Dedup.appendBandKeys(
-                  curated, need("id_field"), need("text_field"),
-                  need("band_key_store"))
-              curated.select(col(need("id_field")), col(need("text_field")))
-                .write.mode("append").parquet(need("corpus_path"))
-            case Some("incremental_simhash") if bucketed =>
-              graft.operators.Dedup.saveBucketedSimhashChunks(
-                curated, need("id_field"), need("text_field"),
-                need("simhash_store"))
-            case Some("incremental_simhash") =>
-              graft.operators.Dedup.appendSimhashes(
-                curated, need("id_field"), need("text_field"),
-                need("simhash_store"))
-            case Some("incremental_tfidf") =>
-              // vectors + postings append under the store's frozen fit
-              // (idf untouched; see Tfidf.appendToStore for the
-              // cap-drift/compaction contract)
-              graft.operators.Tfidf.appendToStore(
-                curated, need("id_field"), need("text_field"),
-                need("tfidf_store"),
-                maxTokenDf = Yaml.str(cur, "tfidf_max_token_df")
-                  .map(_.toDouble.toInt).getOrElse(50))
-            case _ => ()
+          val keyStore = curationStore(cur)
+          keyStore.foreach { s =>
+            s.store.append(s.keys(curated))
+            s.maintain(curated)
           }
+          if (Yaml.str(cur, "dedupe").contains("incremental_tfidf"))
+            // vectors + postings append under the store's frozen fit
+            // (idf untouched; see Tfidf.appendToStore for the
+            // cap-drift/compaction contract)
+            graft.operators.Tfidf.appendToStore(
+              curated, need("id_field"), need("text_field"),
+              need("tfidf_store"),
+              maxTokenDf = Yaml.str(cur, "tfidf_max_token_df")
+                .map(_.toDouble.toInt).getOrElse(50))
           // `curation.search_index: <path>` — the landed rows also
           // append one immutable segment to the BM25 postings index, so
           // tomorrow's retrieval/decontamination probes see them.
@@ -985,39 +943,22 @@ object JobRunner {
                 .map(_.toInt).getOrElse(64))
           }
           // `curation.compact_store_every: N` — every Nth append-count
-          // compacts the flat path store's small files in the same
+          // compacts the flat key store's small files in the same
           // maintenance window (post-commit, single-writer). The count
-          // is the store's current file count, so "every 32" means
+          // is the store's current data-file count, so "every 32" means
           // "compact once ~32 small files accumulate" without any extra
-          // state. Bucketed tables and the tfidf store are excluded
-          // (bucketed layouts are append-aligned; tfidf compacts by
-          // re-running saveStore, see Tfidf.appendToStore).
+          // state. Bucketed tables are excluded (their appends stay
+          // bucket-aligned); the tfidf store compacts by re-running
+          // saveStore, see Tfidf.appendToStore.
           Yaml.str(cur, "compact_store_every").map(_.toDouble.toInt)
             .filter(_ > 0).foreach { every =>
-              val flatStore = Yaml.str(cur, "dedupe") match {
-                case Some("incremental") if !bucketed &&
-                    curationStoreFormat(cur) != "bloom" =>
-                  Some(need("fingerprint_store"))
-                case Some("incremental_near") if !bucketed =>
-                  Some(need("band_key_store"))
-                case Some("incremental_simhash") if !bucketed =>
-                  Some(need("simhash_store"))
-                case _ => None
-              }
-              flatStore.foreach { sp =>
-                val root = new org.apache.hadoop.fs.Path(sp)
-                val fs = root.getFileSystem(
-                  curated.sparkSession.sessionState.newHadoopConf())
-                val nFiles =
-                  if (fs.exists(root))
-                    fs.listStatus(root).count(st => st.isFile &&
-                      !st.getPath.getName.startsWith("_") &&
-                      !st.getPath.getName.startsWith("."))
-                  else 0
-                if (nFiles >= every) {
-                  val (b, a) = graft.core.StoreCompaction
-                    .compactFlatStore(curated.sparkSession, sp)
-                  log(s"compacted store $sp: $b -> $a files")
+              keyStore.filter(_.compact).map(_.store).foreach { st =>
+                st.location match {
+                  case KeyStore.Flat(sp)
+                      if st.dataFileCount(curated.sparkSession) >= every =>
+                    val (b, a) = StoreCompaction.compactFlatStore(curated.sparkSession, sp)
+                    log(s"compacted store $sp: $b -> $a files")
+                  case _ => ()
                 }
               }
               // the segmented search index compacts on the same
@@ -1136,13 +1077,7 @@ object RunJob {
   def main(args: Array[String]): Unit = {
     val jobPath = args(0)
     val mode = if (args.length > 1) args(1) else "self_hosted"
-    val builder = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
+    val builder = GraftSession.builder()
     JobRunner.configureCatalog(builder)
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -36,11 +36,7 @@ object StoreCompaction {
     val root = new Path(storePath)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     require(fs.exists(root), s"no store at $storePath")
-    def dataFiles = fs.listStatus(root).toSeq.filter { st =>
-      st.isFile && !st.getPath.getName.startsWith("_") &&
-        !st.getPath.getName.startsWith(".")
-    }
-    val before = dataFiles
+    val before = DataFiles.list(fs, root)
     if (before.isEmpty) return (0, 0)
     val totalBytes = before.map(_.getLen).sum
     val n = math.max(1L, (totalBytes + targetFileBytes - 1) / targetFileBytes).toInt
@@ -60,10 +56,7 @@ object StoreCompaction {
     // semantics, recovered by the next compaction — instead of a
     // window where the store has NO data files (all data stranded in
     // the tmp dir and the next read failing on schema inference).
-    val moved = fs.listStatus(tmp).toSeq.filter { st =>
-      st.isFile && !st.getPath.getName.startsWith("_") &&
-        !st.getPath.getName.startsWith(".")
-    }
+    val moved = DataFiles.list(fs, tmp)
     moved.foreach(st =>
       fs.rename(st.getPath, new Path(root, st.getPath.getName)))
     before.foreach(st => fs.delete(st.getPath, false))

@@ -3,8 +3,9 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
-import graft.core.CacheScope
+import graft.core.{CacheScope, KeyStore}
 
 /** Deduplication operators for large-scale training-data pipelines:
   * exact (fingerprint groupBy), MinHash+LSH (banded), SimHash (chunked),
@@ -87,11 +88,6 @@ object Dedup {
       "left_anti")
   }
 
-  /** Append a batch's fingerprints to a parquet store — the maintenance
-    * half of [[dropDuplicatesIncremental]]: run it on the rows that
-    * actually landed, and tomorrow's batch dedups against them without
-    * ever rereading today's text.
-    */
   /** The fingerprint normalization convention id, recorded in every
     * fingerprint store's params sidecar: a store written under a
     * DIFFERENT normalization (e.g. case-preserving) would join cleanly
@@ -100,141 +96,22 @@ object Dedup {
     */
   val FingerprintNorm = "lower:ws-collapse:trim:md5"
 
-  private def fingerprintMeta: Map[String, Any] = Map("norm" -> FingerprintNorm)
-
-  def appendFingerprints(df: DataFrame, textCol: String,
-      storePath: String): Unit = {
-    graft.core.StoreMeta.writeOrRequire(df.sparkSession, storePath,
-      "fingerprint", fingerprintMeta)
-    df.select(fingerprint(col(textCol)).as("fp"))
-      .write.mode("append").parquet(storePath)
-  }
-
-  /** Read a fingerprint store; a MISSING store is an empty set (first run
-    * bootstraps). Only path-not-found is treated as bootstrap — a
-    * transient FS failure, permission error, or corrupt store must FAIL
-    * the job, because silently returning an empty store disables
-    * incremental dedup and commits duplicates against the corpus.
+  /** The corpus side of [[dropDuplicatesIncremental]]: one `fp` row per
+    * landed document (`df.select(fingerprint(col(text)).as("fp"))`),
+    * appended post-commit so tomorrow's batch dedups against it without
+    * rereading today's text.
+    *
+    * Bucketed on `fp` — the 100 TB shape. The per-batch left-ANTI join's
+    * corpus side cannot be broadcast (it is the big side by definition)
+    * and Spark cannot build the anti join against the batch, so a flat
+    * store's fingerprint column is re-SHUFFLED on every batch; the
+    * bucketed table is stored pre-partitioned on the join key and reads
+    * with ZERO Exchange — only the batch shuffles, into the bucket count
+    * (BucketedStoreSpec pins it).
     */
-  def readFingerprints(spark: org.apache.spark.sql.SparkSession,
-      storePath: String): DataFrame =
-    try {
-      graft.core.StoreMeta.requireIfPresent(spark, storePath,
-        "fingerprint", fingerprintMeta)
-      spark.read.parquet(storePath)
-    } catch {
-      case e: org.apache.spark.sql.AnalysisException
-          if e.getCondition == "PATH_NOT_FOUND" ||
-            Option(e.getMessage).exists(_.contains("Path does not exist")) =>
-        emptyFingerprints(spark)
-    }
-
-  private def emptyFingerprints(
-      spark: org.apache.spark.sql.SparkSession): DataFrame =
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("fp",
-          org.apache.spark.sql.types.StringType))))
-
-  /** Read a BUCKETED fingerprint table ([[saveBucketedFingerprints]]);
-    * a missing table is an empty set — the same first-run bootstrap
-    * contract as [[readFingerprints]] (and like there, only absence is
-    * bootstrap: a present-but-unreadable table fails the job).
-    */
-  def readBucketedFingerprints(spark: org.apache.spark.sql.SparkSession,
-      table: String): DataFrame = {
-    graft.core.StoreMeta.requireIfPresentTable(spark, table,
-      "fingerprint", fingerprintMeta)
-    readBucketedFingerprints0(spark, table)
-  }
-
-  private def readBucketedFingerprints0(
-      spark: org.apache.spark.sql.SparkSession, table: String): DataFrame =
-    if (spark.catalog.tableExists(table)) spark.table(table)
-    else { bucketedBootstrapGuard(spark, table); emptyFingerprints(spark) }
-
-  /** Guard the "missing table = first run" bootstrap against the one
-    * situation where it silently commits duplicates: the table is not in
-    * THIS session's catalog but its warehouse directory exists on disk —
-    * i.e. a previous PROCESS wrote it and this session runs on the
-    * default in-memory catalog, which dies with its session. Bootstrapping
-    * here would dedup against nothing and re-commit the corpus, so fail
-    * loudly instead (the same philosophy as [[readFingerprints]]'
-    * absence-only bootstrap). Oneshot CLI cycles need a persistent
-    * metastore (`GRAFT_CATALOG=hive`) or a long-lived session
-    * (Orchestrator / BatchRunner).
-    */
-  private def bucketedBootstrapGuard(
-      spark: org.apache.spark.sql.SparkSession, table: String): Unit = {
-    // Hadoop FS, not java.nio: the warehouse can be s3a:// (no NIO
-    // provider) or a local path with characters a java.net.URI rejects —
-    // either would turn the day-1 bootstrap into a crash.
-    // defaultTablePath resolves the table's DATABASE first; a
-    // db-qualified store table whose database doesn't exist yet is a
-    // genuine first run (no database → no warehouse dir to collide
-    // with), so that lookup failure falls through to the documented
-    // empty-store bootstrap instead of crashing it.
-    val tablePath =
-      try spark.sessionState.catalog.defaultTablePath(
-        spark.sessionState.sqlParser.parseTableIdentifier(table))
-      catch {
-        case _: org.apache.spark.sql.catalyst.analysis.NoSuchDatabaseException =>
-          return
-      }
-    val loc = new org.apache.hadoop.fs.Path(tablePath)
-    val fs = loc.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(loc))
-      throw new IllegalStateException(
-        s"Bucketed store table '$table' is not in this session's catalog " +
-          s"but its warehouse location '$loc' exists on disk. A previous " +
-          "process likely wrote it and this session's in-memory catalog " +
-          "cannot see it; bootstrapping would silently disable incremental " +
-          "dedup and commit duplicates. Run with a persistent metastore " +
-          "(GRAFT_CATALOG=hive on the CLI), reuse a long-lived session, " +
-          "or remove the stale location.")
-  }
-
-  /** BUCKETED fingerprint store — the 100 TB shape of the incremental
-    * store. The per-batch check is a left-ANTI join whose corpus side
-    * cannot be broadcast (it is the big side by definition) and whose
-    * batch side Spark cannot build against (anti builds right), so with
-    * a plain parquet store the corpus fingerprint column is re-SHUFFLED
-    * on every batch. `bucketBy(fp)` + `saveAsTable` stores the corpus
-    * pre-partitioned on the join key: the batch-vs-store join then reads
-    * the store with ZERO Exchange — only the batch shuffles, into the
-    * bucket count — and appends stay bucket-aligned, so the store is
-    * never rewritten. Pass `spark.table(table)` as the
-    * `corpusFingerprints` of [[dropDuplicatesIncremental]]; the
-    * exchange elimination is automatic (BucketedStoreSpec pins it).
-    */
-  def saveBucketedFingerprints(df: DataFrame, textCol: String,
-      table: String, buckets: Int = 256): Unit = {
-    graft.core.StoreMeta.requireIfPresentTable(df.sparkSession, table,
-      "fingerprint", fingerprintMeta)
-    df.select(fingerprint(col(textCol)).as("fp"))
-      .write.mode("append").format("parquet")
-      .bucketBy(buckets, "fp").sortBy("fp").saveAsTable(table)
-    graft.core.StoreMeta.writeOrRequireTable(df.sparkSession, table,
-      "fingerprint", fingerprintMeta)
-  }
-
-  /** Bucketed (id, band-key) store for [[dropNearDuplicatesIncremental]]
-    * — same reasoning as [[saveBucketedFingerprints]]: the LSH join
-    * shuffles on `bk`, so a store bucketed on `bk` streams in place
-    * while only the batch band keys move.
-    */
-  def saveBucketedBandKeys(df: DataFrame, idCol: String, textCol: String,
-      table: String, buckets: Int = 256, shingleN: Int = 3,
-      bands: Int = 16, rowsPerBand: Int = 4): Unit = {
-    graft.core.StoreMeta.requireIfPresentTable(df.sparkSession, table,
-      "minhash_band_keys", bandKeyMeta(shingleN, bands, rowsPerBand))
-    minhashBandKeys(df, idCol, textCol, shingleN, bands, rowsPerBand)
-      .write.mode("append").format("parquet")
-      .bucketBy(buckets, "bk").sortBy("bk").saveAsTable(table)
-    graft.core.StoreMeta.writeOrRequireTable(df.sparkSession, table,
-      "minhash_band_keys", bandKeyMeta(shingleN, bands, rowsPerBand))
-  }
+  def fingerprintStore(at: KeyStore.Location): KeyStore =
+    KeyStore("fingerprint", Map("norm" -> FingerprintNorm),
+      StructType(Seq(StructField("fp", StringType))), "fp", at)
 
   // ----------------------------------------------------------- Bloom sketch
 
@@ -252,7 +129,7 @@ object Dedup {
     * (store sketch and [[mergeFingerprintBloom]]-maintained increments)
     * must use the SAME sizing or the merge throws
     * `IncompatibleMergeException`. An empty store yields a valid empty
-    * sketch (first-run bootstrap, matching [[readFingerprints]]).
+    * sketch (first-run bootstrap, matching [[fingerprintStore]]).
     */
   def buildFingerprintBloom(corpusFingerprints: DataFrame,
       expectedItems: Long, fpp: Double = 0.01): Array[Byte] = {
@@ -322,7 +199,7 @@ object Dedup {
   }
 
   /** Overwrite the store's sketch sidecar (post-commit maintenance —
-    * the sketch twin of [[appendFingerprints]]).
+    * the sketch twin of the [[fingerprintStore]] append).
     */
   def writeBloomSidecar(spark: org.apache.spark.sql.SparkSession,
       storePath: String, sketch: Array[Byte]): Unit = {
@@ -925,7 +802,7 @@ object Dedup {
     * [[dropNearDuplicatesIncremental]]: dedup a new batch against an
     * existing corpus represented ONLY by its stored (id, simhash) table
     * ([[simhashTable]] layout, maintained append-only via
-    * [[appendSimhashes]]); corpus text is never re-read.
+    * [[simhashStore]]); corpus text is never re-read.
     *
     * Keeps batch rows that (a) survive within-batch simhash clustering
     * ([[dropSimhashNearDuplicates]] — min-id survivor per transitive
@@ -958,8 +835,8 @@ object Dedup {
   }
 
   /** [[dropSimhashDuplicatesIncremental]] against a PRE-EXPLODED
-    * (sh, chunk-key) store — the form [[saveBucketedSimhashChunks]]
-    * writes. With the store bucketed on the chunk key, the candidate
+    * (sh, chunk-key) store — the form [[simhashChunkStore]] holds.
+    * With the store bucketed on the chunk key, the candidate
     * join's fallback regime (batch too big to broadcast — exactly the
     * 100 TB tail) reads the store with ZERO Exchange; the (id, sh)
     * store above must re-explode and re-shuffle its chunks every batch
@@ -1011,90 +888,41 @@ object Dedup {
     survivors.join(pinIfSmall(hits, nBatch), Seq(idCol), "left_anti")
   }
 
-  /** Append a batch's simhashes to a parquet store — the maintenance half
-    * of [[dropSimhashDuplicatesIncremental]]: run on the rows that
-    * landed; tomorrow's batch Hamming-checks against them without
-    * re-reading today's text.
-    */
   private def simhashMeta(bits: Int, hasher: SimhashHasher): Map[String, Any] =
     Map("bits" -> bits, "hasher" -> hasher.toString)
 
-  def appendSimhashes(df: DataFrame, idCol: String, textCol: String,
-      storePath: String, bits: Int = 64,
-      hasher: SimhashHasher = SimhashHasher.Xx): Unit = {
-    graft.core.StoreMeta.writeOrRequire(df.sparkSession, storePath,
-      "simhash", simhashMeta(bits, hasher))
-    simhashTable(df, idCol, textCol, bits, hasher)
-      .write.mode("append").parquet(storePath)
-  }
-
-  /** BUCKETED simhash-chunk store — the 100 TB shape of the simhash
-    * store (same reasoning as [[saveBucketedFingerprints]]): rows are
-    * the PRE-EXPLODED (sh, chunk-key) pairs — 4 rows × 16 bytes per doc
-    * — bucketed on the chunk key the candidate join shuffles on, so in
-    * the non-broadcast regime the store streams in place. The (id, sh)
-    * layout cannot be bucket-joined: its join key is derived
-    * (explode of pigeonhole chunks), which discards the scan's
-    * partitioning.
+  /** The corpus side of [[dropSimhashDuplicatesIncremental]]: (id, sh)
+    * rows from [[simhashTable]] under the same (bits, hasher), appended
+    * post-commit so tomorrow's batch Hamming-checks against them without
+    * re-reading today's text. Flat only: its join key is derived (explode
+    * of pigeonhole chunks), which discards any bucketing of the scan —
+    * the bucketed form is [[simhashChunkStore]].
     */
-  def saveBucketedSimhashChunks(df: DataFrame, idCol: String,
-      textCol: String, table: String, buckets: Int = 256, bits: Int = 64,
-      hasher: SimhashHasher = SimhashHasher.Xx): Unit = {
-    graft.core.StoreMeta.requireIfPresentTable(df.sparkSession, table,
-      "simhash_chunks", simhashMeta(bits, hasher))
+  def simhashStore(at: KeyStore.Location, bits: Int = 64,
+      hasher: SimhashHasher = SimhashHasher.Xx): KeyStore =
+    KeyStore("simhash", simhashMeta(bits, hasher),
+      StructType(Seq(StructField("id", LongType), StructField("sh", LongType))),
+      "sh", at)
+
+  /** The corpus side of [[dropSimhashDuplicatesIncrementalChunked]]:
+    * PRE-EXPLODED (sh, chunk-key) rows from [[simhashChunks]] — 4 rows ×
+    * 16 bytes per doc — bucketed on the chunk key the candidate join
+    * shuffles on, so in the non-broadcast regime (the 100 TB tail) the
+    * store streams in place.
+    */
+  def simhashChunkStore(at: KeyStore.Location, bits: Int = 64,
+      hasher: SimhashHasher = SimhashHasher.Xx): KeyStore =
+    KeyStore("simhash_chunks", simhashMeta(bits, hasher),
+      StructType(Seq(StructField("sh", LongType), StructField("ck", StringType))),
+      "ck", at)
+
+  /** (sh, ck) rows: each document's simhash with its 4 pigeonhole chunk
+    * keys — the [[simhashChunkStore]] layout.
+    */
+  def simhashChunks(df: DataFrame, idCol: String, textCol: String,
+      bits: Int = 64, hasher: SimhashHasher = SimhashHasher.Xx): DataFrame =
     simhashTable(df, idCol, textCol, bits, hasher)
       .select(col("sh"), explode(simhashChunkKeys(col("sh"), bits)).as("ck"))
-      .write.mode("append").format("parquet")
-      .bucketBy(buckets, "ck").sortBy("ck").saveAsTable(table)
-    graft.core.StoreMeta.writeOrRequireTable(df.sparkSession, table,
-      "simhash_chunks", simhashMeta(bits, hasher))
-  }
-
-  /** Read a bucketed simhash-chunk table; missing table = empty set,
-    * same bootstrap contract as [[readSimhashes]]; present table
-    * params must match the probe's (sidecar TBLPROPERTIES).
-    */
-  def readBucketedSimhashChunks(spark: org.apache.spark.sql.SparkSession,
-      table: String, bits: Int = 64,
-      hasher: SimhashHasher = SimhashHasher.Xx): DataFrame =
-    if (spark.catalog.tableExists(table)) {
-      graft.core.StoreMeta.requireIfPresentTable(spark, table,
-        "simhash_chunks", simhashMeta(bits, hasher))
-      spark.table(table)
-    } else {
-      bucketedBootstrapGuard(spark, table)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("sh",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("ck",
-            org.apache.spark.sql.types.StringType))))
-    }
-
-  /** Read a simhash store; a MISSING store is an empty set (first run
-    * bootstraps) — any other failure propagates, same contract as
-    * [[readFingerprints]].
-    */
-  def readSimhashes(spark: org.apache.spark.sql.SparkSession,
-      storePath: String, bits: Int = 64,
-      hasher: SimhashHasher = SimhashHasher.Xx): DataFrame =
-    try {
-      graft.core.StoreMeta.requireIfPresent(spark, storePath,
-        "simhash", simhashMeta(bits, hasher))
-      spark.read.parquet(storePath)
-    } catch {
-      case e: org.apache.spark.sql.AnalysisException
-          if e.getCondition == "PATH_NOT_FOUND" ||
-            Option(e.getMessage).exists(_.contains("Path does not exist")) =>
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("id",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("sh",
-              org.apache.spark.sql.types.LongType))))
-    }
 
   /** Incremental NEAR-dup dedup — the operator a daily 100 TB ingest
     * actually runs: dedup a new batch against an existing corpus without
@@ -1102,7 +930,7 @@ object Dedup {
     * candidate- or batch-bounded:
     *  - `corpusBands` — the (id, bk) band-key STORE
     *    ([[minhashBandKeys]], `bands` 8-byte keys per corpus doc,
-    *    maintained append-only via [[appendBandKeys]]). The LSH join
+    *    maintained append-only in [[bandKeyStore]]). The LSH join
     *    against the batch's band keys shuffles rows sized by the BATCH:
     *    the batch side is broadcast when small, so the corpus store
     *    streams in place.
@@ -1167,68 +995,21 @@ object Dedup {
     survivors.join(pinIfSmall(losers, nCands), Seq(idCol), "left_anti")
   }
 
-  /** Append a batch's band keys to a parquet store — the maintenance half
-    * of [[dropNearDuplicatesIncremental]]: run it on the rows that
-    * landed, and tomorrow's batch LSH-joins against them without
-    * re-shingling today's documents.
+  /** The corpus side of [[dropNearDuplicatesIncremental]]: (id, bk) rows
+    * from [[minhashBandKeys]] under the same (shingleN, bands,
+    * rowsPerBand), appended post-commit so tomorrow's batch LSH-joins
+    * against them without re-shingling today's documents. A probe under
+    * different LSH params is refused: a `bands = 8` batch joined against
+    * a `bands = 16` store silently under-matches every band key.
+    * Bucketed on `bk`, the key the LSH join shuffles on, the store
+    * streams in place while only the batch band keys move.
     */
-  private def bandKeyMeta(shingleN: Int, bands: Int,
-      rowsPerBand: Int): Map[String, Any] =
-    Map("shingleN" -> shingleN, "bands" -> bands, "rowsPerBand" -> rowsPerBand)
-
-  def appendBandKeys(df: DataFrame, idCol: String, textCol: String,
-      storePath: String, shingleN: Int = 3, bands: Int = 16,
-      rowsPerBand: Int = 4): Unit = {
-    graft.core.StoreMeta.writeOrRequire(df.sparkSession, storePath,
-      "minhash_band_keys", bandKeyMeta(shingleN, bands, rowsPerBand))
-    minhashBandKeys(df, idCol, textCol, shingleN, bands, rowsPerBand)
-      .write.mode("append").parquet(storePath)
-  }
-
-  /** Read a band-key store; a MISSING store is an empty set (first run
-    * bootstraps) — any other failure propagates, same contract as
-    * [[readFingerprints]]. The probe's LSH params must match the
-    * store's recorded sidecar: a `bands = 8` batch joined against a
-    * `bands = 16` store silently under-matches every band key, which
-    * is exactly the wrongness the sidecar refuses.
-    */
-  def readBandKeys(spark: org.apache.spark.sql.SparkSession,
-      storePath: String, shingleN: Int = 3, bands: Int = 16,
-      rowsPerBand: Int = 4): DataFrame =
-    try {
-      graft.core.StoreMeta.requireIfPresent(spark, storePath,
-        "minhash_band_keys", bandKeyMeta(shingleN, bands, rowsPerBand))
-      spark.read.parquet(storePath)
-    } catch {
-      case e: org.apache.spark.sql.AnalysisException
-          if e.getCondition == "PATH_NOT_FOUND" ||
-            Option(e.getMessage).exists(_.contains("Path does not exist")) =>
-        emptyBandKeys(spark)
-    }
-
-  private def emptyBandKeys(
-      spark: org.apache.spark.sql.SparkSession): DataFrame =
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("bk",
-          org.apache.spark.sql.types.LongType))))
-
-  /** Read a BUCKETED band-key table ([[saveBucketedBandKeys]]); missing
-    * table = empty set, same bootstrap contract as [[readBandKeys]]
-    * (guarded against the stale-warehouse case — see
-    * [[readBucketedFingerprints]]).
-    */
-  def readBucketedBandKeys(spark: org.apache.spark.sql.SparkSession,
-      table: String, shingleN: Int = 3, bands: Int = 16,
-      rowsPerBand: Int = 4): DataFrame =
-    if (spark.catalog.tableExists(table)) {
-      graft.core.StoreMeta.requireIfPresentTable(spark, table,
-        "minhash_band_keys", bandKeyMeta(shingleN, bands, rowsPerBand))
-      spark.table(table)
-    } else { bucketedBootstrapGuard(spark, table); emptyBandKeys(spark) }
+  def bandKeyStore(at: KeyStore.Location, shingleN: Int = 3, bands: Int = 16,
+      rowsPerBand: Int = 4): KeyStore =
+    KeyStore("minhash_band_keys",
+      Map("shingleN" -> shingleN, "bands" -> bands, "rowsPerBand" -> rowsPerBand),
+      StructType(Seq(StructField("id", LongType), StructField("bk", LongType))),
+      "bk", at)
 
   /** Exact substring-SPAN dedup — repeated-passage detection at the
     * granularity pre-training curation actually wants (Lee et al. 2022,

@@ -1742,7 +1742,7 @@ object Similarity {
 
   /** (id, bk) multi-table LSH bucket keys of an embedding table — the
     * STORE layout for incremental embedding dedup: `tables` keys per
-    * vector, maintained append-only via [[appendEmbeddingBuckets]], so
+    * vector, maintained append-only in [[embeddingBucketStore]], so
     * tomorrow's batch LSH-joins against the corpus without re-hashing
     * it.
     */
@@ -1751,64 +1751,24 @@ object Similarity {
     bucketTable(df.select(col(idCol).as("id"), col(vecCol).as("v")),
       planes, tables, dim)
 
-  /** Append a batch's bucket keys to a parquet store — the maintenance
-    * half of [[dropNearCorpusEmbeddings]].
+  /** The corpus side of [[dropNearCorpusEmbeddings]]: (id, bk) rows from
+    * [[embeddingBucketKeys]] under the same hyperplane params, appended
+    * post-commit. Batch keys hashed under different planes/tables/dim
+    * join the store cleanly and match the WRONG buckets, so a mismatched
+    * probe is refused. Bucketed on `bk` (the 100 TB shape, see
+    * [[graft.operators.Dedup.fingerprintStore]]), the store join streams
+    * the table in place every batch.
     */
-  private def bucketMeta(planes: Int, tables: Int, dim: Int): Map[String, Any] =
-    Map("planes" -> planes, "tables" -> tables, "dim" -> dim)
-
-  def appendEmbeddingBuckets(df: DataFrame, idCol: String, vecCol: String,
-      storePath: String, planes: Int = 8, tables: Int = 8,
-      dim: Int = 64): Unit = {
-    graft.core.StoreMeta.writeOrRequire(df.sparkSession, storePath,
-      "embedding_buckets", bucketMeta(planes, tables, dim))
-    embeddingBucketKeys(df, idCol, vecCol, planes, tables, dim)
-      .write.mode("append").parquet(storePath)
-  }
-
-  /** Read an embedding-bucket store for [[dropNearCorpusEmbeddings]];
-    * missing store = empty set (first-run bootstrap), same contract as
-    * [[graft.operators.Dedup.readBandKeys]]. The probe's hyperplane
-    * params must match the store's sidecar — batch keys hashed under
-    * different planes/tables/dim join the store cleanly and match the
-    * WRONG buckets, the silent under-match the sidecar refuses.
-    */
-  def readEmbeddingBuckets(spark: org.apache.spark.sql.SparkSession,
-      storePath: String, planes: Int = 8, tables: Int = 8,
-      dim: Int = 64): DataFrame =
-    try {
-      graft.core.StoreMeta.requireIfPresent(spark, storePath,
-        "embedding_buckets", bucketMeta(planes, tables, dim))
-      spark.read.parquet(storePath)
-    } catch {
-      case e: org.apache.spark.sql.AnalysisException
-          if e.getCondition == "PATH_NOT_FOUND" ||
-            Option(e.getMessage).exists(_.contains("Path does not exist")) =>
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("id",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("bk",
-              org.apache.spark.sql.types.StringType))))
-    }
-
-  /** BUCKETED bucket-key store — the 100 TB shape (see
-    * [[graft.operators.Dedup.saveBucketedFingerprints]]): the store join
-    * shuffles on `bk`, so a table bucketed on `bk` streams in place
-    * every batch; pass `spark.table(table)` as `corpusBuckets`.
-    */
-  def saveBucketedEmbeddingBuckets(df: DataFrame, idCol: String,
-      vecCol: String, table: String, buckets: Int = 256, planes: Int = 8,
-      tables: Int = 8, dim: Int = 64): Unit = {
-    graft.core.StoreMeta.requireIfPresentTable(df.sparkSession, table,
-      "embedding_buckets", bucketMeta(planes, tables, dim))
-    embeddingBucketKeys(df, idCol, vecCol, planes, tables, dim)
-      .write.mode("append").format("parquet")
-      .bucketBy(buckets, "bk").sortBy("bk").saveAsTable(table)
-    graft.core.StoreMeta.writeOrRequireTable(df.sparkSession, table,
-      "embedding_buckets", bucketMeta(planes, tables, dim))
-  }
+  def embeddingBucketStore(at: graft.core.KeyStore.Location, planes: Int = 8,
+      tables: Int = 8, dim: Int = 64): graft.core.KeyStore =
+    graft.core.KeyStore("embedding_buckets",
+      Map("planes" -> planes, "tables" -> tables, "dim" -> dim),
+      org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("id",
+          org.apache.spark.sql.types.LongType),
+        org.apache.spark.sql.types.StructField("bk",
+          org.apache.spark.sql.types.StringType))),
+      "bk", at)
 
   /** Incremental EMBEDDING near-dup dedup — the semantic twin of
     * [[graft.operators.Dedup.dropNearDuplicatesIncremental]]: dedup a

@@ -119,8 +119,7 @@ object ParquetSink {
       val out = Seq.newBuilder[(String, Long)]
       while (it.hasNext) {
         val f = it.next()
-        val name = f.getPath.getName
-        if (!name.startsWith("_") && !name.startsWith(".") &&
+        if (graft.core.DataFiles.isData(f.getPath.getName) &&
           f.getModificationTime >= sinceMs)
           out += f.getPath.toString -> f.getLen
       }

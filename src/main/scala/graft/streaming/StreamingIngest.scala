@@ -111,8 +111,8 @@ object StreamingIngest {
     * dups drop via watermark-bounded fingerprint state, and rows whose
     * text the EXISTING corpus already contains drop via a stream-static
     * left-anti join against the corpus fingerprint store (the same
-    * append-only parquet store the batch path maintains via
-    * `appendFingerprints`; read it with `readFingerprints`).
+    * append-only parquet store the batch path maintains,
+    * [[graft.operators.Dedup.fingerprintStore]]).
     *
     * Scale shape: the static side re-reads only the store's narrow
     * 16-byte fingerprint column per micro-batch (partition-prunable,
@@ -166,9 +166,9 @@ object StreamingIngest {
     * Scale shape per micro-batch is the batch operator's: the store
     * streams against broadcast batch keys; corpus docs are read
     * candidate-pruned. With `bucketedStore = true`,
-    * `bandKeyStorePath` names a TABLE maintained via
-    * `saveBucketedBandKeys`, and the store join reads with zero
-    * store-side Exchange in the non-broadcast regime — the right shape
+    * `bandKeyStorePath` names a bucketed TABLE
+    * ([[graft.operators.Dedup.bandKeyStore]]), and the store join reads
+    * with zero store-side Exchange in the non-broadcast regime — the right shape
     * for a long-running ingester whose store grows without bound.
     */
   /** Run `body` exactly once per (markerRoot, batchId) — the per-batch
@@ -222,33 +222,22 @@ object StreamingIngest {
         val spark = batch.sparkSession
         runBatchOnce(spark, outPath, batchId) {
           graft.core.CacheScope.scoped {
-            val store =
-              if (bucketedStore) graft.operators.Dedup.readBucketedBandKeys(
-                spark, bandKeyStorePath)
-              else graft.operators.Dedup.readBandKeys(spark, bandKeyStorePath)
-            val corpus =
-              try spark.read.parquet(corpusDocsPath)
-                .select(col(idCol), col(textCol))
-              catch {
-                case e: org.apache.spark.sql.AnalysisException
-                    if e.getCondition == "PATH_NOT_FOUND" ||
-                      Option(e.getMessage)
-                        .exists(_.contains("Path does not exist")) =>
-                  batch.select(col(idCol), col(textCol)).limit(0)
-              }
+            val store = graft.operators.Dedup.bandKeyStore(
+              if (bucketedStore) graft.core.KeyStore.Bucketed(bandKeyStorePath)
+              else graft.core.KeyStore.Flat(bandKeyStorePath),
+              shingleN, bands, rowsPerBand)
+            val docs = batch.select(col(idCol), col(textCol))
+            val corpus = graft.core.KeyStore
+              .readOrEmpty(spark, corpusDocsPath, docs.schema)
+              .select(col(idCol), col(textCol))
             // persisted: written to three sinks below, computed once
             val survivors = graft.core.CacheScope.persist(
               graft.operators.Dedup.dropNearDuplicatesIncremental(
-                batch, idCol, textCol, store, corpus,
+                batch, idCol, textCol, store.read(spark), corpus,
                 shingleN, bands, rowsPerBand, threshold))
             survivors.write.mode("append").parquet(outPath)
-            if (bucketedStore)
-              graft.operators.Dedup.saveBucketedBandKeys(survivors, idCol,
-                textCol, bandKeyStorePath,
-                shingleN = shingleN, bands = bands, rowsPerBand = rowsPerBand)
-            else
-              graft.operators.Dedup.appendBandKeys(survivors, idCol,
-                textCol, bandKeyStorePath, shingleN, bands, rowsPerBand)
+            store.append(graft.operators.Dedup.minhashBandKeys(survivors,
+              idCol, textCol, shingleN, bands, rowsPerBand))
             survivors.select(col(idCol), col(textCol))
               .write.mode("append").parquet(corpusDocsPath)
           }
@@ -272,7 +261,7 @@ object StreamingIngest {
     * stale markers pruned per commit.
     *
     * Bootstrap: a missing store reads as empty
-    * ([[graft.operators.Similarity.readEmbeddingBuckets]]) and a
+    * ([[graft.operators.Similarity.embeddingBucketStore]]) and a
     * missing output path is an empty corpus, so the first batch seeds
     * both.
     */
@@ -296,8 +285,8 @@ object StreamingIngest {
         val spark = batch.sparkSession
         runBatchOnce(spark, outPath, batchId) {
           graft.core.CacheScope.scoped {
-            val store = graft.operators.Similarity.readEmbeddingBuckets(
-              spark, bucketStorePath, planes, tables, dim)
+            val store = graft.operators.Similarity.embeddingBucketStore(
+              graft.core.KeyStore.Flat(bucketStorePath), planes, tables, dim)
             val outDir = new org.apache.hadoop.fs.Path(outPath)
             val fs = outDir.getFileSystem(spark.sessionState.newHadoopConf())
             val slim = batch
@@ -314,7 +303,7 @@ object StreamingIngest {
               else slim.limit(0)
             val survivors = graft.core.CacheScope.persist(
               graft.operators.Similarity.dropNearCorpusEmbeddings(
-                batch, idCol, vecCol, store, corpusVecs, threshold,
+                batch, idCol, vecCol, store.read(spark), corpusVecs, threshold,
                 planes, tables, dim, probes = probes))
             // bucket keys BEFORE the survivor write: every mid-batch
             // crash window is then output-duplicate-free. Crash between
@@ -327,8 +316,8 @@ object StreamingIngest {
             // batch matches its OWN keys + vectors at cosine 1 and
             // drops entirely. The reverse order left a window that
             // re-landed the same survivors in the output corpus.
-            graft.operators.Similarity.appendEmbeddingBuckets(survivors,
-              idCol, vecCol, bucketStorePath, planes, tables, dim)
+            store.append(graft.operators.Similarity.embeddingBucketKeys(
+              survivors, idCol, vecCol, planes, tables, dim))
             survivors.write.mode("append").parquet(outPath)
           }
         }

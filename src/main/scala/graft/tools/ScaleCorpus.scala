@@ -98,13 +98,7 @@ object ScaleCorpus {
     val Array(inDir, outDir, factorS) = args.take(3)
     val model = if (args.length == 4) args(3)
       else sys.env.getOrElse("GRAFT_SCALE_MODEL", "split")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
+    val spark = graft.GraftSession.builder()
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try synthesize(spark, inDir, outDir, factorS.toInt, model)

@@ -441,7 +441,8 @@ class JobRunnerSpec extends SparkSpec {
     // first run: store missing → nothing dropped; then persist fingerprints
     val out1 = JobRunner.applyCuration(day1, raw)
     out1.count() shouldBe 2
-    graft.operators.Dedup.appendFingerprints(out1, "text", store)
+    graft.operators.Dedup.fingerprintStore(graft.core.KeyStore.Flat(store))
+      .append(out1.select(graft.operators.Dedup.fingerprint($"text").as("fp")))
     // second run: known text dropped, fresh kept
     val day2 = Seq((3L, "DOC  one"), (4L, "doc three")).toDF("doc_id", "text")
     JobRunner.applyCuration(day2, raw)
@@ -558,7 +559,8 @@ class JobRunnerSpec extends SparkSpec {
     // first run: store missing → nothing dropped; then persist hashes
     val out1 = JobRunner.applyCuration(day1, raw)
     out1.count() shouldBe 2
-    graft.operators.Dedup.appendSimhashes(out1, "doc_id", "text", store)
+    graft.operators.Dedup.simhashStore(graft.core.KeyStore.Flat(store))
+      .append(graft.operators.Dedup.simhashTable(out1, "doc_id", "text"))
     // second run: near-identical of a stored doc dropped, fresh kept
     val day2 = Seq(
       (3L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
@@ -582,8 +584,8 @@ class JobRunnerSpec extends SparkSpec {
       "simhash_store" -> table))
     // day 1: missing TABLE bootstraps; then the bucketed maintenance half
     JobRunner.applyCuration(day1, raw).count() shouldBe 2
-    graft.operators.Dedup.saveBucketedSimhashChunks(
-      day1, "doc_id", "text", table)
+    graft.operators.Dedup.simhashChunkStore(graft.core.KeyStore.Bucketed(table))
+      .append(graft.operators.Dedup.simhashChunks(day1, "doc_id", "text"))
     spark.table(table).columns shouldBe Array("sh", "ck") // pre-exploded
     val day2 = Seq(
       (3L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
@@ -807,7 +809,8 @@ class JobRunnerSpec extends SparkSpec {
     spark.read.parquet(r2.outputPath).select("id").collect()
       .map(_.get(0).toString) shouldBe Array("4")
     // and day-2's survivor was appended for day 3
-    graft.operators.Dedup.readFingerprints(spark, store).count() shouldBe 3
+    graft.operators.Dedup.fingerprintStore(graft.core.KeyStore.Flat(store))
+      .read(spark).count() shouldBe 3
   }
 
   test("curation compact_store_every: maintenance window compacts the flat store") {
@@ -850,7 +853,8 @@ class JobRunnerSpec extends SparkSpec {
     storeFiles(store) shouldBe 1
     storeFiles(store) should be < (afterDay1 + 1)
     // and the compacted store still carries all four fingerprints + meta
-    graft.operators.Dedup.readFingerprints(spark, store).count() shouldBe 4
+    graft.operators.Dedup.fingerprintStore(graft.core.KeyStore.Flat(store))
+      .read(spark).count() shouldBe 4
     graft.core.StoreMeta.read(spark, store) should not be empty
   }
 
@@ -989,7 +993,8 @@ class JobRunnerSpec extends SparkSpec {
     r2.validRecords shouldBe 1
     spark.read.parquet(r2.outputPath).select("id").collect()
       .map(_.get(0).toString) shouldBe Array("4")
-    graft.operators.Dedup.readFingerprints(spark, store).count() shouldBe 3
+    graft.operators.Dedup.fingerprintStore(graft.core.KeyStore.Flat(store))
+      .read(spark).count() shouldBe 3
     // day 3: carol (day-2 commit) is now in the MERGED sidecar — a
     // sketch stuck at day-1 would let her bloom-negative straight through
     val (dir3, _) = fixture(Seq("5,carol,5.0", "6,dave,4.0"), "strict")
@@ -1111,7 +1116,8 @@ class JobRunnerSpec extends SparkSpec {
     val out1 = JobRunner.applyCuration(day1, raw)
     out1.count() shouldBe 2
     // maintenance half (what update_store runs post-commit)
-    graft.operators.Dedup.saveBucketedBandKeys(out1, "doc_id", "text", table)
+    graft.operators.Dedup.bandKeyStore(graft.core.KeyStore.Bucketed(table))
+      .append(graft.operators.Dedup.minhashBandKeys(out1, "doc_id", "text"))
     day1.write.mode("append").parquet(corpusDir)
     // day 2: near-identical of a stored doc dropped, fresh kept
     val day2 = Seq(

@@ -7,6 +7,13 @@ import java.nio.file.Files
 class StoreCompactionSpec extends SparkSpec {
   import spark.implicits._
 
+  private def appendFingerprints(batch: org.apache.spark.sql.DataFrame,
+      path: String): Unit =
+    Dedup.fingerprintStore(KeyStore.Flat(path))
+      .append(batch.select(Dedup.fingerprint(col("text")).as("fp")))
+
+  private def bandKeys(path: String) = Dedup.bandKeyStore(KeyStore.Flat(path))
+
   test("flat store compaction: fewer files, identical rows, sidecars preserved") {
     val p = Files.createTempDirectory("compact-").toString + "/fps"
     // ten daily appends → many small files
@@ -14,7 +21,7 @@ class StoreCompactionSpec extends SparkSpec {
       val batch = (1 to 20)
         .map(i => (day * 100L + i, s"doc $day $i text"))
         .toDF("id", "text")
-      Dedup.appendFingerprints(batch, "text", p)
+      appendFingerprints(batch, p)
     }
     val rowsBefore = spark.read.parquet(p).collect().map(_.getString(0)).sorted
     val metaBefore = StoreMeta.read(spark, p)
@@ -26,7 +33,8 @@ class StoreCompactionSpec extends SparkSpec {
     spark.read.parquet(p).collect().map(_.getString(0)).sorted shouldBe rowsBefore
     // sidecar survived the swap, still refuses a mismatched convention
     StoreMeta.read(spark, p) shouldBe metaBefore
-    Dedup.readFingerprints(spark, p).count() shouldBe rowsBefore.length.toLong
+    Dedup.fingerprintStore(KeyStore.Flat(p)).read(spark).count() shouldBe
+      rowsBefore.length.toLong
   }
 
   test("compaction of a missing store refuses; empty store is a no-op") {
@@ -46,16 +54,14 @@ class StoreCompactionSpec extends SparkSpec {
     val base = Files.createTempDirectory("compact-crash-").toString
     val p = base + "/fps"
     (1 to 30).map(i => (i.toLong, s"doc $i text")).grouped(10)
-      .foreach(b => Dedup.appendFingerprints(b.toDF("id", "text"), "text", p))
+      .foreach(b => appendFingerprints(b.toDF("id", "text"), p))
     val rows = spark.read.parquet(p).collect().map(_.getString(0)).sorted
     // stage the crash state: copy every data file alongside itself with
     // a fresh unique name (exactly what renamed-in compacted files look
     // like before the old set is deleted)
     val root = new org.apache.hadoop.fs.Path(p)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.listStatus(root).filter(st => st.isFile &&
-        !st.getPath.getName.startsWith("_") &&
-        !st.getPath.getName.startsWith(".")).foreach { st =>
+    DataFiles.list(fs, root).foreach { st =>
       org.apache.hadoop.fs.FileUtil.copy(fs, st.getPath, fs,
         new org.apache.hadoop.fs.Path(root,
           "part-crash-" + st.getPath.getName.stripPrefix("part-")),
@@ -79,12 +85,12 @@ class StoreCompactionSpec extends SparkSpec {
       (2L, "totally different words live here right now friends")
     ).toDF("id", "text")
     val p = Files.createTempDirectory("compact-bk-").toString + "/bands"
-    Dedup.appendBandKeys(docs, "id", "text", p)
-    Dedup.appendBandKeys(
-      docs.select((col("id") + 10).as("id"), col("text")), "id", "text", p)
-    val probeBefore = Dedup.readBandKeys(spark, p).collect().toSet
+    bandKeys(p).append(Dedup.minhashBandKeys(docs, "id", "text"))
+    bandKeys(p).append(Dedup.minhashBandKeys(
+      docs.select((col("id") + 10).as("id"), col("text")), "id", "text"))
+    val probeBefore = bandKeys(p).read(spark).collect().toSet
     StoreCompaction.compactFlatStore(spark, p)
-    Dedup.readBandKeys(spark, p).collect().toSet shouldBe probeBefore
+    bandKeys(p).read(spark).collect().toSet shouldBe probeBefore
   }
 
   private def col(n: String) = org.apache.spark.sql.functions.col(n)

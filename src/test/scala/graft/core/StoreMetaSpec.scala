@@ -28,42 +28,45 @@ class StoreMetaSpec extends SparkSpec {
   ).toDF("vec_id", "v")
 
   test("band-key store: mismatched LSH params refuse on read and append") {
-    val p = tmp("meta-bk-")
-    Dedup.appendBandKeys(docs, "doc_id", "text", p,
-      shingleN = 3, bands = 16, rowsPerBand = 4)
+    val p = KeyStore.Flat(tmp("meta-bk-"))
+    def bands(shingleN: Int, bands: Int) =
+      Dedup.bandKeyStore(p, shingleN = shingleN, bands = bands, rowsPerBand = 4)
+    bands(3, 16).append(Dedup.minhashBandKeys(docs, "doc_id", "text",
+      shingleN = 3, bands = 16, rowsPerBand = 4))
     // matching read is fine
-    Dedup.readBandKeys(spark, p, shingleN = 3, bands = 16, rowsPerBand = 4)
-      .count() should be > 0L
+    bands(3, 16).read(spark).count() should be > 0L
     // mismatched probe refuses with the param names in the message
-    val e = the[IllegalArgumentException] thrownBy
-      Dedup.readBandKeys(spark, p, shingleN = 3, bands = 8, rowsPerBand = 4)
+    val e = the[IllegalArgumentException] thrownBy bands(3, 8).read(spark)
     e.getMessage should include("bands")
     // mismatched APPEND refuses too — mixed-parameter rows are unusable
     an[IllegalArgumentException] should be thrownBy
-      Dedup.appendBandKeys(docs, "doc_id", "text", p,
-        shingleN = 5, bands = 16, rowsPerBand = 4)
+      bands(5, 16).append(Dedup.minhashBandKeys(docs, "doc_id", "text",
+        shingleN = 5, bands = 16, rowsPerBand = 4))
   }
 
   test("simhash store: mismatched bits/hasher refuse") {
-    val p = tmp("meta-sh-")
-    Dedup.appendSimhashes(docs, "doc_id", "text", p, bits = 64)
-    Dedup.readSimhashes(spark, p, bits = 64).count() should be > 0L
+    val p = KeyStore.Flat(tmp("meta-sh-"))
+    Dedup.simhashStore(p, bits = 64)
+      .append(Dedup.simhashTable(docs, "doc_id", "text", bits = 64))
+    Dedup.simhashStore(p, bits = 64).read(spark).count() should be > 0L
     val e = the[IllegalArgumentException] thrownBy
-      Dedup.readSimhashes(spark, p, bits = 32)
+      Dedup.simhashStore(p, bits = 32).read(spark)
     e.getMessage should include("bits")
     an[IllegalArgumentException] should be thrownBy
-      Dedup.readSimhashes(spark, p, bits = 64,
-        hasher = Dedup.SimhashHasher.Md5_60)
+      Dedup.simhashStore(p, bits = 64, hasher = Dedup.SimhashHasher.Md5_60)
+        .read(spark)
   }
 
   test("embedding-bucket store: mismatched hyperplane params refuse") {
-    val p = tmp("meta-eb-")
-    Similarity.appendEmbeddingBuckets(vecs, "vec_id", "v", p,
-      planes = 4, tables = 4, dim = 3)
-    Similarity.readEmbeddingBuckets(spark, p, planes = 4, tables = 4, dim = 3)
-      .count() should be > 0L
+    val p = KeyStore.Flat(tmp("meta-eb-"))
+    Similarity.embeddingBucketStore(p, planes = 4, tables = 4, dim = 3)
+      .append(Similarity.embeddingBucketKeys(vecs, "vec_id", "v",
+        planes = 4, tables = 4, dim = 3))
+    Similarity.embeddingBucketStore(p, planes = 4, tables = 4, dim = 3)
+      .read(spark).count() should be > 0L
     val e = the[IllegalArgumentException] thrownBy
-      Similarity.readEmbeddingBuckets(spark, p, planes = 8, tables = 4, dim = 3)
+      Similarity.embeddingBucketStore(p, planes = 8, tables = 4, dim = 3)
+        .read(spark)
     e.getMessage should include("planes")
   }
 
@@ -88,13 +91,13 @@ class StoreMetaSpec extends SparkSpec {
 
   test("fingerprint store: a different normalization convention refuses") {
     val p = tmp("meta-fp-")
-    Dedup.appendFingerprints(docs, "text", p)
-    Dedup.readFingerprints(spark, p).count() shouldBe 2L
+    val store = Dedup.fingerprintStore(KeyStore.Flat(p))
+    store.append(docs.select(Dedup.fingerprint($"text").as("fp")))
+    store.read(spark).count() shouldBe 2L
     // a store written under an older/different convention id
     StoreMeta.overwrite(spark, p, "fingerprint",
       Map("norm" -> "case-preserving:md5"))
-    val e = the[IllegalArgumentException] thrownBy
-      Dedup.readFingerprints(spark, p)
+    val e = the[IllegalArgumentException] thrownBy store.read(spark)
     e.getMessage should include("norm")
   }
 
@@ -129,34 +132,33 @@ class StoreMetaSpec extends SparkSpec {
   }
 
   test("bootstrap: missing stores still read as empty, sidecar-less stores tolerated") {
-    val missing = tmp("meta-miss-")
-    Dedup.readBandKeys(spark, missing).count() shouldBe 0L
-    Dedup.readSimhashes(spark, missing).count() shouldBe 0L
-    Dedup.readFingerprints(spark, missing).count() shouldBe 0L
-    Similarity.readEmbeddingBuckets(spark, missing).count() shouldBe 0L
+    val missing = KeyStore.Flat(tmp("meta-miss-"))
+    Dedup.bandKeyStore(missing).read(spark).count() shouldBe 0L
+    Dedup.simhashStore(missing).read(spark).count() shouldBe 0L
+    Dedup.fingerprintStore(missing).read(spark).count() shouldBe 0L
+    Similarity.embeddingBucketStore(missing).read(spark).count() shouldBe 0L
     // pre-sidecar store (data, no _meta_params): reads fine
     val legacy = tmp("meta-legacy-")
     Seq(1L -> 2L).toDF("id", "bk").write.parquet(legacy)
-    Dedup.readBandKeys(spark, legacy).count() shouldBe 1L
+    Dedup.bandKeyStore(KeyStore.Flat(legacy)).read(spark).count() shouldBe 1L
   }
 
   test("bucketed band-key table: TBLPROPERTIES sidecar refuses a mismatched probe") {
     val t = "meta_bucketed_bk"
     spark.sql(s"DROP TABLE IF EXISTS $t")
-    Dedup.saveBucketedBandKeys(docs, "doc_id", "text", t, buckets = 4,
-      shingleN = 3, bands = 16, rowsPerBand = 4)
-    Dedup.readBucketedBandKeys(spark, t, shingleN = 3, bands = 16,
-      rowsPerBand = 4).count() should be > 0L
-    val e = the[IllegalArgumentException] thrownBy
-      Dedup.readBucketedBandKeys(spark, t, shingleN = 3, bands = 8,
-        rowsPerBand = 4)
+    def bands(n: Int, rowsPerBand: Int) = Dedup.bandKeyStore(
+      KeyStore.Bucketed(t, buckets = 4), shingleN = 3, bands = n,
+      rowsPerBand = rowsPerBand)
+    def keys(n: Int, rowsPerBand: Int) = Dedup.minhashBandKeys(docs, "doc_id",
+      "text", shingleN = 3, bands = n, rowsPerBand = rowsPerBand)
+    bands(16, 4).append(keys(16, 4))
+    bands(16, 4).read(spark).count() should be > 0L
+    val e = the[IllegalArgumentException] thrownBy bands(8, 4).read(spark)
     e.getMessage should include("bands")
     // append with the same params keeps working; different params refuse
-    Dedup.saveBucketedBandKeys(docs, "doc_id", "text", t, buckets = 4,
-      shingleN = 3, bands = 16, rowsPerBand = 4)
+    bands(16, 4).append(keys(16, 4))
     an[IllegalArgumentException] should be thrownBy
-      Dedup.saveBucketedBandKeys(docs, "doc_id", "text", t, buckets = 4,
-        shingleN = 3, bands = 32, rowsPerBand = 2)
+      bands(32, 2).append(keys(32, 2))
     spark.sql(s"DROP TABLE IF EXISTS $t")
   }
 }

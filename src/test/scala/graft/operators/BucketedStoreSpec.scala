@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import graft.core.KeyStore
 import org.apache.spark.sql.DataFrame
 
 /** The bucketed incremental stores must (a) produce the SAME results as
@@ -44,11 +45,11 @@ class BucketedStoreSpec extends SparkSpec {
   test("bucketed fingerprint store: same rows, store side reads with no Exchange") {
     val table = "bspec_fp"
     spark.sql(s"DROP TABLE IF EXISTS $table")
-    Dedup.saveBucketedFingerprints(corpus, "text", table)
+    val store = Dedup.fingerprintStore(KeyStore.Bucketed(table))
+    store.append(corpus.select(Dedup.fingerprint($"text").as("fp")))
     // appends stay bucket-aligned (no rewrite, still one table)
-    Dedup.saveBucketedFingerprints(
-      Seq((4L, "late-arriving corpus text about harbors")).toDF("doc_id", "text"),
-      "text", table)
+    store.append(Seq("late-arriving corpus text about harbors").toDF("text")
+      .select(Dedup.fingerprint($"text").as("fp")))
     val viaBucketed = Dedup.dropDuplicatesIncremental(
       batch, "doc_id", "text", spark.table(table))
     val viaPlain = Dedup.dropDuplicatesIncremental(
@@ -76,7 +77,8 @@ class BucketedStoreSpec extends SparkSpec {
   test("bucketed band-key store: incremental near-dup identical, fewer shuffles") {
     val table = "bspec_bk"
     spark.sql(s"DROP TABLE IF EXISTS $table")
-    Dedup.saveBucketedBandKeys(corpus, "doc_id", "text", table)
+    Dedup.bandKeyStore(KeyStore.Bucketed(table))
+      .append(Dedup.minhashBandKeys(corpus, "doc_id", "text"))
     val viaBucketed = Dedup.dropNearDuplicatesIncremental(
       batch, "doc_id", "text", spark.table(table), corpus)
     val viaPlain = Dedup.dropNearDuplicatesIncremental(
@@ -107,7 +109,8 @@ class BucketedStoreSpec extends SparkSpec {
   test("bucketed simhash-chunk store: identical results, store side reads with no Exchange") {
     val table = "bspec_sc"
     spark.sql(s"DROP TABLE IF EXISTS $table")
-    Dedup.saveBucketedSimhashChunks(corpus, "doc_id", "text", table)
+    Dedup.simhashChunkStore(KeyStore.Bucketed(table))
+      .append(Dedup.simhashChunks(corpus, "doc_id", "text"))
     val viaBucketed = Dedup.dropSimhashDuplicatesIncrementalChunked(
       batch, "doc_id", "text", spark.table(table))
     val viaPlain = Dedup.dropSimhashDuplicatesIncremental(
@@ -133,40 +136,6 @@ class BucketedStoreSpec extends SparkSpec {
     spark.sql(s"DROP TABLE $table")
   }
 
-  test("stale-warehouse bootstrap guard: missing table + existing location fails loudly") {
-    // the cross-process hazard: a previous RunJob wrote the table, this
-    // session's in-memory catalog can't see it — bootstrapping would
-    // silently disable incremental dedup and commit duplicates
-    val table = "bspec_stale_guard"
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    val loc = java.nio.file.Paths.get(new java.net.URI(
-      spark.sessionState.catalog.defaultTablePath(
-        spark.sessionState.sqlParser.parseTableIdentifier(table)).toString))
-    java.nio.file.Files.createDirectories(loc)
-    try {
-      val e = the[IllegalStateException] thrownBy
-        Dedup.readBucketedFingerprints(spark, table)
-      e.getMessage should include("warehouse location")
-      (the[IllegalStateException] thrownBy
-        Dedup.readBucketedBandKeys(spark, table))
-        .getMessage should include("GRAFT_CATALOG=hive")
-      (the[IllegalStateException] thrownBy
-        Dedup.readBucketedSimhashChunks(spark, table))
-        .getMessage should include("stale location")
-    } finally java.nio.file.Files.deleteIfExists(loc)
-    // location gone → genuine first run → bootstrap works again
-    Dedup.readBucketedFingerprints(spark, table).count() shouldBe 0
-  }
-
-  test("bootstrap guard: db-qualified table in a nonexistent database bootstraps") {
-    // no database → no warehouse dir to collide with → the documented
-    // day-1 empty-store bootstrap, not a NoSuchDatabaseException crash
-    Dedup.readBucketedFingerprints(spark, "no_such_db_bspec.fp")
-      .count() shouldBe 0
-    Dedup.readBucketedBandKeys(spark, "no_such_db_bspec.bands")
-      .count() shouldBe 0
-  }
-
   test("bucketed embedding-bucket store: incremental embedding dedup identical") {
     val dim = 8
     def vec(seed: Int) = Array.tabulate(dim)(i => math.sin(seed * 31 + i).toFloat)
@@ -174,8 +143,10 @@ class BucketedStoreSpec extends SparkSpec {
     val bat = Seq((10L, vec(1)), (11L, vec(40))).toDF("vec_id", "emb")
     val table = "bspec_eb"
     spark.sql(s"DROP TABLE IF EXISTS $table")
-    Similarity.saveBucketedEmbeddingBuckets(corp, "vec_id", "emb", table,
+    Similarity.embeddingBucketStore(KeyStore.Bucketed(table),
       planes = 4, tables = 2, dim = dim)
+      .append(Similarity.embeddingBucketKeys(corp, "vec_id", "emb",
+        planes = 4, tables = 2, dim = dim))
     val out = Similarity.dropNearCorpusEmbeddings(bat, "vec_id", "emb",
       spark.table(table), corp, threshold = 0.95,
       planes = 4, tables = 2, dim = dim)

@@ -174,11 +174,12 @@ class DedupSpec extends SparkSpec {
     // band-key store round-trips through parquet (the production shape)
     val storePath = java.nio.file.Files.createTempDirectory("bandstore")
       .toString + "/bands"
-    Dedup.appendBandKeys(corpus, "id", "text", storePath,
-      shingleN = 2, bands = 16, rowsPerBand = 2)
+    def bandStore(path: String) = Dedup.bandKeyStore(
+      graft.core.KeyStore.Flat(path), shingleN = 2, bands = 16, rowsPerBand = 2)
+    bandStore(storePath).append(Dedup.minhashBandKeys(corpus, "id", "text",
+      shingleN = 2, bands = 16, rowsPerBand = 2))
     // the probe must state the store's LSH params (sidecar-checked)
-    val store = Dedup.readBandKeys(spark, storePath,
-      shingleN = 2, bands = 16, rowsPerBand = 2)
+    val store = bandStore(storePath).read(spark)
     val batch = Seq(
       (10L, "alpha beta gamma delta epsilon zeta eta theta kappa"), // ≈ corpus 1
       (11L, "fresh new totally original content appears in this batch"),
@@ -190,7 +191,7 @@ class DedupSpec extends SparkSpec {
       threshold = 0.6)
     out.select("id").as[Long].collect().sorted shouldBe Array(11L, 13L)
     // missing band store bootstraps empty (first run): only in-batch dedup
-    val empty = Dedup.readBandKeys(spark, storePath + "_missing")
+    val empty = bandStore(storePath + "_missing").read(spark)
     Dedup.dropNearDuplicatesIncremental(batch, "id", "text",
       empty, corpus.limit(0), shingleN = 2, bands = 16, rowsPerBand = 2,
       threshold = 0.6)
@@ -295,8 +296,9 @@ class DedupSpec extends SparkSpec {
     // the simhash store round-trips through parquet (the production shape)
     val storePath = java.nio.file.Files.createTempDirectory("shstore")
       .toString + "/simhashes"
-    Dedup.appendSimhashes(corpus, "id", "text", storePath)
-    val store = Dedup.readSimhashes(spark, storePath)
+    def shStore(path: String) = Dedup.simhashStore(graft.core.KeyStore.Flat(path))
+    shStore(storePath).append(Dedup.simhashTable(corpus, "id", "text"))
+    val store = shStore(storePath).read(spark)
     val batch = Seq(
       (10L, "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu"), // = corpus 1
       (11L, "fresh new totally original content appears within this batch today"),
@@ -306,20 +308,9 @@ class DedupSpec extends SparkSpec {
     val out = Dedup.dropSimhashDuplicatesIncremental(batch, "id", "text", store)
     out.select("id").as[Long].collect().sorted shouldBe Array(11L, 13L)
     // missing store bootstraps empty (first run): only in-batch dedup
-    val empty = Dedup.readSimhashes(spark, storePath + "_missing")
+    val empty = shStore(storePath + "_missing").read(spark)
     Dedup.dropSimhashDuplicatesIncremental(batch, "id", "text", empty)
       .select("id").as[Long].collect().sorted shouldBe Array(10L, 11L, 13L)
-  }
-
-  test("readFingerprints: missing store bootstraps empty; corrupt store fails") {
-    val tmp = java.nio.file.Files.createTempDirectory("fpstore").toString
-    // missing path → empty frame (first-run bootstrap)
-    Dedup.readFingerprints(spark, s"$tmp/never_written").count() shouldBe 0L
-    // a corrupt store must FAIL, not silently disable incremental dedup
-    val bad = java.nio.file.Paths.get(tmp, "corrupt.parquet")
-    java.nio.file.Files.write(bad, "this is not parquet".getBytes)
-    an[Exception] should be thrownBy
-      Dedup.readFingerprints(spark, bad.toString).count()
   }
 
   test("duplicateSpans: maximal repeated spans, cross-doc and within-doc") {

@@ -61,7 +61,8 @@ class ScaleFallbackSpec extends SparkSpec {
     val store = java.nio.file.Files
       .createTempDirectory("fallback-store-").toString + "/bands"
     val corpus = docs.filter($"doc_id" < 100)
-    Dedup.appendBandKeys(corpus, "doc_id", "text", store)
+    Dedup.bandKeyStore(graft.core.KeyStore.Flat(store))
+      .append(Dedup.minhashBandKeys(corpus, "doc_id", "text"))
     val batch = docs.filter($"doc_id" >= 100 && $"doc_id" < 300)
     def run(): Array[Long] = Dedup.dropNearDuplicatesIncremental(
       batch, "doc_id", "text",

@@ -1040,10 +1040,11 @@ class SimilaritySpec extends SparkSpec {
     // the bucket store round-trips through parquet (the production shape)
     val storePath = java.nio.file.Files.createTempDirectory("ebstore")
       .toString + "/buckets"
-    Similarity.appendEmbeddingBuckets(corpus, "vec_id", "v", storePath,
-      planes = 4, tables = 4, dim = 3)
-    val store = Similarity.readEmbeddingBuckets(spark, storePath,
-      planes = 4, tables = 4, dim = 3)
+    val bucketStore = Similarity.embeddingBucketStore(
+      graft.core.KeyStore.Flat(storePath), planes = 4, tables = 4, dim = 3)
+    bucketStore.append(Similarity.embeddingBucketKeys(corpus, "vec_id", "v",
+      planes = 4, tables = 4, dim = 3))
+    val store = bucketStore.read(spark)
     val batch = Seq(
       (10L, Array(0.99f, 0.01f, 0.0f)),   // ≈ corpus 1 → dropped via store
       (11L, Array(0.0f, 0.0f, 1.0f)),     // orthogonal to all → kept

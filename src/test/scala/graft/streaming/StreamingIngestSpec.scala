@@ -144,8 +144,10 @@ class StreamingIngestSpec extends SparkSpec {
     val ckpt = Files.createTempDirectory("stream-inc-ckpt-").toString
     val store = Files.createTempDirectory("stream-inc-store-").toString + "/fp"
     // existing corpus: "hello world" is already committed
-    graft.operators.Dedup.appendFingerprints(
-      Seq((1L, "hello world")).toDF("id", "text"), "text", store)
+    val fingerprints =
+      graft.operators.Dedup.fingerprintStore(graft.core.KeyStore.Flat(store))
+    fingerprints.append(Seq("hello world").toDF("text")
+      .select(graft.operators.Dedup.fingerprint($"text").as("fp")))
     Files.writeString(in.resolve("a.csv"),
       "ts,doc\n2024-01-01 00:00:01,HELLO  world\n" + // corpus dup → dropped
         "2024-01-01 00:00:02,fresh doc\n" +
@@ -156,7 +158,7 @@ class StreamingIngestSpec extends SparkSpec {
       .option("header", "true").csv(in.toString)
     val deduped = StreamingIngest.dedupStreamIncremental(
       raw, "doc", "ts", "1 hour",
-      graft.operators.Dedup.readFingerprints(spark, store))
+      fingerprints.read(spark))
     val q = deduped.writeStream.format("parquet")
       .option("path", out)
       .option("checkpointLocation", ckpt)
@@ -338,8 +340,9 @@ class StreamingIngestSpec extends SparkSpec {
     spark.read.parquet(out).select("vec_id").as[Long]
       .collect().sorted shouldBe Array(1L, 5L, 11L)
     // the persisted store holds exactly the survivors' keys: tables per id
-    graft.operators.Similarity.readEmbeddingBuckets(spark, store,
-      planes = 4, tables = 4, dim = 8)
+    graft.operators.Similarity.embeddingBucketStore(
+      graft.core.KeyStore.Flat(store), planes = 4, tables = 4, dim = 8)
+      .read(spark)
       .select("id").distinct().as[Long].collect().sorted shouldBe
       Array(1L, 5L, 11L)
   }

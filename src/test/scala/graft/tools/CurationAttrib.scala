@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Dev tool: attribute `curation_pipeline`'s cost per STAGE at a given
   * corpus dir — `Test/runMain graft.tools.CurationAttrib <dir>`.
@@ -16,12 +16,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object CurationAttrib {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
+    val spark = graft.GraftSession.builder()
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val docs = spark.read.parquet(s"$dir/documents.parquet")

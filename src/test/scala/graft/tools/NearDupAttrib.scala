@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev tool: run the `ann_neardup_incremental` bench construction at a
@@ -11,12 +10,7 @@ import org.apache.spark.sql.functions._
 object NearDupAttrib {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
+    val spark = graft.GraftSession.builder()
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val metrics = new scala.collection.concurrent.TrieMap[String, Long]()

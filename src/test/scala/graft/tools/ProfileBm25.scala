@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev tool: split `search_bm25_store_topk`'s cost into build vs probe
@@ -20,12 +19,7 @@ object ProfileBm25 {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val factor = if (args.length > 1) args(1).toInt else 1
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
+    val spark = graft.GraftSession.builder()
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val base = spark.read.parquet(s"$dir/documents.parquet")

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev alias kept for the historical invocation surface
   * (`Test/runMain graft.tools.ScaleUp <inDir> <outDir> <factor>`) —
   * the synthesis itself moved to main scope ([[ScaleCorpus]]) so the
@@ -12,12 +10,7 @@ import org.apache.spark.sql.SparkSession
 object ScaleUp {
   def main(args: Array[String]): Unit = {
     require(args.length == 3, "usage: ScaleUp <inDir> <outDir> <factor>")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
+    val spark = graft.GraftSession.builder()
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try ScaleCorpus.synthesize(spark, args(0), args(1), args(2).toInt)

@@ -17,5 +17,5 @@ sbt -batch "runMain graft.Verify /root/testdata/sf0.01 /tmp/gate_sf001" \
 python3 tools/check_correctness.py /root/testdata/sf0.01 /tmp/gate_sf001 | tail -1
 
 echo "== 4/4 bench: sf0.1 (the driver's BENCH_r{N} input) =="
-SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 \
+SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS="$(nproc)" \
   sbt -batch "runMain graft.Bench" 2>&1 | grep -oE '\{"metric".*'
